@@ -1,33 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
+/** Benchmark entrypoint: times every registered query at
+  * `SPARK_GRAFT_SF_DIR` and ends stdout with one JSON contract line.
+  * Usage: runMain graft.Bench [filter] — the optional filter is
+  * [[SparkEntry.select]]'s, for timing a few named queries. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing knobs, env-parameterized for cluster-scale
-      // tuning. Spark's docs recommend parallelismFirst=false (respect
-      // advisoryPartitionSizeInBytes) on busy clusters; MEASURED here
-      // at sf0.1/local[32] on identical code it LOST both ways (total
-      // 145.9 s vs 131.8 s, per-query median 1.057x) — at this scale
-      // coalescing to size serializes tiny stages that the default
-      // keeps parallel. So the local default stays Spark's default;
-      // flip via env on real clusters where 64 MB+ reduce partitions
-      // are the right unit (OPTIMIZATION_r16.md has the numbers).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Cluster knob: with a reliable checkpoint dir set, every loop
-    // lineage cut (Seams.cut) survives executor loss. Unset locally —
-    // localCheckpoint, same behavior the bench always measured.
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.sparkContext.setCheckpointDir)
+    val selected = SparkEntry.select(args.toSeq)
+    val spark = Session()
     // GC/heap telemetry (stderr + bench_full artifact): the r16 driver
     // run doubled on whole-JVM stalls in untouched queries; these
     // counters say per query how much GC time elapsed and how much
@@ -50,9 +32,9 @@ object Bench {
     // compilation. Seams are released per query — warmup must not
     // carry storage into the measured window.
     val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.foreach { case (_, fn) =>
+    selected.foreach { case (_, fn) =>
       try fn(spark, warmDir).count()
-      catch { case scala.util.control.NonFatal(_) => () }
+      catch { case NonFatal(_) => () }
       Seams.release()
     }
     spark.catalog.clearCache()
@@ -61,36 +43,42 @@ object Bench {
     // so a stray GC pause or scheduler hiccup in one pass doesn't
     // masquerade as query cost.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
+    // One rep's seconds. Free this rep's seam/cut storage OUTSIDE the
+    // timed window: each rep rebuilds and re-materializes its own
+    // seams, while storage stays bounded by one query's working set.
+    def timed(fn: (SparkSession, String) => DataFrame): Double = {
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      finally Seams.release()
+    }
     // Sorted execution order: Map iteration order shifts whenever the
     // key set changes, which moves queries into different GC/contention
     // neighborhoods across rounds and makes per-query timings
     // incomparable round-over-round.
     var qIdx = 0
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = selected.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val gc0 = gcMillis
-      val best = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() }
-        catch { case scala.util.control.NonFatal(_) => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // Free this rep's seam/cut storage OUTSIDE the timed window.
-        // Each rep rebuilds and re-materializes its own seams — the
-        // same per-rep cost profile as the r15/r16 methodology (r16's
-        // per-rep localCheckpoints also re-materialized; they just
-        // never freed), so the timing comparison stays valid while
-        // storage stays bounded by one query's working set.
-        Seams.release()
-        dt
-      }.min
+      // A query that throws in any rep is never timed: it stays out of
+      // `queries` and `total`, is named on stderr, and fails the run.
+      val best =
+        try Some((1 to reps).map(_ => timed(fn)).min)
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name FAILED: " +
+            Option(e.getMessage).getOrElse(e.getClass.getName)
+              .linesIterator.take(4).mkString(" | "))
+          None
+        }
       qIdx += 1
       // Periodic full GC outside the timers: lets the ContextCleaner
       // reap broadcast/shuffle refs from finished queries instead of
       // deferring one giant stall into a later query's timed window.
       if (qIdx % 16 == 0) System.gc()
-      System.err.println(
-        f"[bench] $name%-28s ${best}%8.3f s  gc+${gcMillis - gc0}%4d ms  " +
-        f"storage ${storageMB}%5d MB  heap ${heapMB}%5d MB")
-      name -> best
+      best.map { b =>
+        System.err.println(
+          f"[bench] $name%-28s ${b}%8.3f s  gc+${gcMillis - gc0}%4d ms  " +
+          f"storage ${storageMB}%5d MB  heap ${heapMB}%5d MB")
+        name -> b
+      }
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -113,18 +101,28 @@ object Bench {
     try {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
       System.err.println(s"[bench] full artifact: $out")
-    } catch { case scala.util.control.NonFatal(e) =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $out: ${e.getMessage}")
     }
     // Quiet shutdown, THEN the contract line: the driver parses the
     // bench's stdout as one JSON line of the original schema
-    // {"metric","value","unit","queries":<ALL of them>,"sf"} — it must
-    // be unprefixed (build.sbt forks with StdoutOutput, so nothing
+    // {"metric","value","unit","queries":<every timed query>,"sf"} — it
+    // must be unprefixed (build.sbt forks with StdoutOutput, so nothing
     // rewrites it as `[info] ...`) and be the final stdout line
-    // (spark.stop() runs first; Spark logs go to stderr).
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.stop()
-    println(line)
-    System.out.flush()
+    // (spark.stop() runs first; Spark logs go to stderr). The finally
+    // prints it even if the shutdown throws.
+    try {
+      spark.sparkContext.setLogLevel("ERROR")
+      spark.stop()
+    } finally {
+      println(line)
+      System.out.flush()
+    }
+    val failed = selected.keySet -- results.map(_._1)
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] FAILED ${failed.size}/${selected.size} " +
+        "queries: " + failed.toSeq.sorted.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

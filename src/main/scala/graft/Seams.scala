@@ -25,8 +25,8 @@ import org.apache.spark.sql.Dataset
   *    ONE query's working set instead of accumulating for the life of
   *    the JVM.
   *  - **Cluster-safe parameterization.** With a reliable checkpoint
-  *    dir configured (`SPARK_GRAFT_CHECKPOINT_DIR`, wired by the
-  *    entrypoints via `SparkContext.setCheckpointDir`), both [[seam]]
+  *    dir configured (`SPARK_GRAFT_CHECKPOINT_DIR`, which [[Session]]
+  *    passes to `SparkContext.setCheckpointDir`), both [[seam]]
   *    and [[cut]] become reliable checkpoints that survive executor
   *    loss (guide §5). Locally they stay `localCheckpoint`, the exact
   *    primitive the r15/r16 benches measured.

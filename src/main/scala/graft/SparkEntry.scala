@@ -40,6 +40,25 @@ object SparkEntry {
       graft.streaming.StreamQueries.queries ++
       graft.plans.ExtendedQueries.queries
 
+  /** The queries an entrypoint's optional name filter selects. `args`
+    * hold comma-separated names; none selects every query. A leading
+    * '-' on the first name makes the list an exclude list: scaled
+    * sweeps exclude the by-design-quadratic pair-graph queries (SURVEY
+    * §2 F3) without naming the other 200+. An unknown name throws, so
+    * a typo cannot select nothing and pass.
+    */
+  def select(args: Seq[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val names = args.flatMap(_.split(',')).filter(_.nonEmpty)
+    val exclude = names.headOption.exists(_.startsWith("-"))
+    val listed = names.map(_.stripPrefix("-")).toSet
+    val all = queries
+    val unknown = listed -- all.keySet
+    require(unknown.isEmpty,
+      s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    if (names.isEmpty) all
+    else all.filter { case (name, _) => listed.contains(name) != exclude }
+  }
+
   private val baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // —— group I: headline analytics ——
     "q1_pricing" -> ((s, dir) => Analytics.pricingSummary(cat(s, dir).lineitem)),

@@ -1,36 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name filter (local use;
-    // the driver always runs the full set with 2 args). A leading '-'
-    // on the FIRST entry flips it to an exclude list — scaled sweeps
-    // expect-exclude the by-design-quadratic pair-graph queries
-    // (SURVEY §2 F3 disposition) without enumerating the other 130+.
-    val filterArg = args.lift(2).map(_.split(',').toSet)
-    val (only, except) = filterArg match {
-      case Some(s) if s.exists(_.startsWith("-")) =>
-        (None, Some(s.map(_.stripPrefix("-"))))
-      case other => (other, None)
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.sparkContext.setCheckpointDir)
+    // optional 3rd arg: SparkEntry.select's query-name filter; without
+    // it every query runs
+    val selected = SparkEntry.select(args.toSeq.drop(2))
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
-    val selected = SparkEntry.queries
-      .filter { case (name, _) =>
-        only.forall(_.contains(name)) && except.forall(!_.contains(name)) }
     // Record per-query failures durably: a silent catch once turned a
     // one-line input-type drift into 38 invisibly-absent driver entries.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]

@@ -2,9 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 
 /** Dev harness: dump `.explain("formatted")` for selected queries to
   * <outDir>/<name>_<tag>.txt without executing them. Not part of the
@@ -19,13 +17,7 @@ object Plans {
     val names =
       if (args.length == 4 && args(3) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
     Files.createDirectories(Paths.get(outDir))
     for (name <- names) {
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -85,7 +85,6 @@ def make_scale(cp, src, dst, copies, cpus=32):
         return
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
     sh(["java", *JAVA_OPENS, "-Xmx48g", "-cp", cp,
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         "graft.tools.MakeScale", src, dst, str(copies)], env=env, cwd=REPO)
     open(marker, "w").write(f"{src} x{copies}\n")
 
@@ -141,8 +140,6 @@ def run_engine(cp, sfdir, outdir, names, workers, cpus_per, xmx):
         env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus_per))
         p = subprocess.Popen(
             ["java", *JAVA_OPENS, f"-Xmx{xmx}", "-cp", cp,
-             "-Dspark.ui.enabled=false",
-             "-Dspark.sql.session.timeZone=UTC",
              "graft.Verify", sfdir, outdir, ",".join(split)],
             stdout=log, stderr=log, env=env, cwd=REPO)
         procs.append((p, split, log))
@@ -290,8 +287,6 @@ def main():
         sh(["rm", "-rf", ddir])
         env = dict(os.environ, SPARK_GRAFT_CPUS="32")
         sh(["java", *JAVA_OPENS, "-Xmx48g", "-cp", cp,
-            "-Dspark.ui.enabled=false",
-            "-Dspark.sql.session.timeZone=UTC",
             "graft.tools.DaemonSweep", args.workdir, ddir,
             str(args.daemon_batches)], env=env, cwd=REPO)
         payload = json.load(open(f"{ddir}/daemon_sweep.json"))
@@ -320,8 +315,6 @@ def main():
     if not os.path.exists(osql):
         env = dict(os.environ, SPARK_GRAFT_CPUS="4")
         sh(["java", *JAVA_OPENS, "-Xmx4g", "-cp", cp,
-            "-Dspark.ui.enabled=false",
-            "-Dspark.sql.session.timeZone=UTC",
             "graft.Verify", args.workdir, args.outdir, "ns_filter"],
            env=env, cwd=REPO)
     names = sorted(json.load(open(osql)).keys())
